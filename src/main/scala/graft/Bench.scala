@@ -23,8 +23,8 @@ import org.apache.spark.sql.SparkSession
   *    n is the contention-robust estimator at small n (a spike inflates
   *    the median of 3 whenever it hits 2 of 3 reps, but the min only
   *    when it hits all 3);
-  *  - the JSON carries the 1-minute system load average sampled before
-  *    and after the run, so a contended box is self-identifying;
+  *  - the JSON carries the 1-minute load average at start, end and its
+  *    max after each timed query, which stamps `contended`;
   *  - the harness keeps only the last 2000 chars of stdout, so the
   *    printed line is compact (total + failures + slowest queries +
   *    worst ratios) and the full per-query maps go to
@@ -93,8 +93,7 @@ object Bench {
       Thread.sleep(10000)
       loadStart = loadavg
     }
-    val contended = loadStart > maxLoad
-    if (contended && sys.env.get("SPARK_GRAFT_BENCH_REFUSE").contains("1")) {
+    if (loadStart > maxLoad && sys.env.get("SPARK_GRAFT_BENCH_REFUSE").contains("1")) {
       println(s"""{"metric":"refused","reason":"loadavg_start ${f"$loadStart%.2f"} > $maxLoad after ${waitSec}s wait","unit":"loadavg"}""")
       spark.stop()
       sys.exit(2)
@@ -159,6 +158,7 @@ object Bench {
     val timedQueries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
       SparkEntry.queries.toSeq.filter(_._1.matches(only)).sortBy(_._1)
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
+    var loadMax = loadStart
     for (_ <- 1 to reps; (name, fn) <- timedQueries) {
       val t0 = System.nanoTime()
       try {
@@ -168,6 +168,7 @@ object Bench {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
       }
+      loadMax = math.max(loadMax, loadavg)
     }
     // per query: (median, min) over reps
     val results: Map[String, (Double, Double)] = timedQueries.map { case (name, _) =>
@@ -204,7 +205,7 @@ object Bench {
          |"cpus":$cpus,"sf":"$sfDir","n_queries":${results.size},
          |"total_min":${num(totalMin)},
          |"loadavg_start":${num(loadStart)},"loadavg_end":${num(loadEnd)},
-         |"contended":$contended,"max_load":$maxLoad,
+         |"loadavg_max":${num(loadMax)},"contended":${loadMax > maxLoad},"max_load":$maxLoad,
          |"failed":$failedJson,
          |"queries":$qsFull,
          |"queries_min":$qsMinFull,
@@ -222,7 +223,7 @@ object Bench {
       .map { case (k, (md, _)) => "\"" + k + "\":" + num(md) }.mkString("{", ",", "}")
     val worst = ratios.toSeq.sortBy(-_._2).take(10)
       .map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${num(total)},"unit":"sec","runs":$reps,"n_queries":${results.size},"total_min":${num(totalMin)},"loadavg_start":${num(loadStart)},"loadavg_end":${num(loadEnd)},"contended":$contended,"failed":$failedJson,"queries":$slowest,"queries_note":"slowest 16 of ${results.size} by median; full maps in $detailPath","vs_baseline_worst":$worst,"vs_baseline_note":"min-of-$reps / baseline","baseline_total":${num(baseline.values.sum)},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${num(total)},"unit":"sec","runs":$reps,"n_queries":${results.size},"total_min":${num(totalMin)},"loadavg_start":${num(loadStart)},"loadavg_end":${num(loadEnd)},"loadavg_max":${num(loadMax)},"contended":${loadMax > maxLoad},"failed":$failedJson,"queries":$slowest,"queries_note":"slowest 16 of ${results.size} by median; full maps in $detailPath","vs_baseline_worst":$worst,"vs_baseline_note":"min-of-$reps / baseline","baseline_total":${num(baseline.values.sum)},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

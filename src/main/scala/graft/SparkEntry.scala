@@ -34,7 +34,7 @@ object SparkEntry {
     "q_tsdb_stats"      -> (Scan.tsdbStats _),
     "q_label_values"    -> ((s, d) => Scan.labelValues(
       s, d, "user_id", Seq(("event_type", "=", "click")))),
-    // anchored =~ through the dictionary path (string + numeric) plus !=:
+    // anchored =~ row filters (string + numeric) plus !=:
     // "1[0-9]" must match exactly the two-digit user_ids, never 112
     "q_label_values_regex" -> ((s, d) => Scan.labelValues(
       s, d, "user_id", Seq(("event_type", "=~", "cl.*|vi.*"),

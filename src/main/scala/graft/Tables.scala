@@ -35,12 +35,14 @@ object Tables {
 
   /** [[eventsNorm]] with an optional inclusive `[lo, hi]` epoch-ns range
     * applied to the RAW parquet column (long ns or NTZ µs, whichever the
-    * layout has) so the bound reaches the scan as a PushedFilter and
-    * prunes row groups — the reference's mint/maxt stats-selector trick.
-    * Filters on the rebuilt `ts`/derived `ts_ns` columns cannot push
-    * down (the rebuild blocks pushdown); callers still re-filter `ts_ns`
-    * exactly, this range exists for pruning. At µs-granular data the µs
+    * layout has) so the bound reaches the scan as a PushedFilter
+    * (filters on the rebuilt `ts`/`ts_ns` cannot push down; callers
+    * still re-filter `ts_ns` exactly). At µs-granular data the µs
     * conversion (ceil lo / floor hi) is exact, not just a superset.
+    * Only the long-ns layout skips row groups on it (the reference's
+    * mint/maxt stats selector): Spark's ParquetFilters builds timestamp
+    * predicates only for `isAdjustedToUTC=true` columns, so on the µs
+    * (TIMESTAMP_NTZ) layout every row group is read.
     */
   def eventsRanged(spark: SparkSession, dir: String,
                    boundsNs: Option[(Long, Long)]): DataFrame = {

@@ -571,7 +571,7 @@ object Promql {
     val out = scala.collection.mutable.Buffer(p.ident())
     while (p.peek(",")) { p.eat(","); out += p.ident() }
     p.eat(")")
-    out.toSeq
+    out.toSeq.map(l => if (l == "__name__") "event_type" else l)
   }
 
   private def parsePrimary(p: P): Expr = {
@@ -942,23 +942,6 @@ object Promql {
   private def exactSum(c: Column): Column = graft.functions.ExactNum.exactSum(c)
   private def exactSumSq(c: Column): Column = graft.functions.ExactNum.exactSumSq(c)
 
-  /** Samples matching a selector, via the shared matcher path
-    * (Scan.applyMatchers): equality/negation cast the literal so the
-    * predicate reaches the parquet scan; regex resolves over the
-    * distinct label set and broadcast-semi-joins (dictionary pushdown).
-    * `offset` shifts samples forward so step t reports data from
-    * t − offset (PromQL offset modifier).
-    *
-    * `boundsSec` is the evaluation's [start − window, end] range on the
-    * SHIFTED time axis (epoch sec). It is expressed on the raw `ts_ns`
-    * column, un-shifted by the selector's offset, so the bound reaches
-    * the parquet scan as a pushed filter and prunes row groups — the
-    * reference never reads outside (mint, maxt) either: its querier is
-    * created with the query's time range (reference:
-    * prometheus/querier.go:30-47). The pushed range is a superset of
-    * the exact per-step windows; `coveringSteps` still does the exact
-    * (t − W, t] assignment.
-    */
   /** The series-identity label columns an evaluation of `sel` carries:
     * a named metric fixes event_type (so user_id is the only label); a
     * metric-less selector keeps event_type as a label, PromQL's
@@ -968,6 +951,20 @@ object Promql {
     (if (sel.metric.isEmpty) Seq("user_id", "event_type") else Seq("user_id")) ++
       sel.extraLabels
 
+  /** Samples matching a selector, via the shared matcher path
+    * (Scan.applyMatchers), which filters inside the source's one scan.
+    * `offset` shifts samples forward so step t reports data from
+    * t − offset (PromQL offset modifier).
+    *
+    * `boundsSec` is the evaluation's [start − window, end] range on the
+    * SHIFTED time axis (epoch sec), handed to the source un-shifted by
+    * the selector's offset, as the reference's querier gets the query's
+    * time range (reference: prometheus/querier.go:30-47). It prunes on
+    * the long-ns events layout, ChunkStore's `mint`/`maxt` and the
+    * rollup stores' `bucket`; the µs events layout reads every row
+    * group (Tables.eventsRanged). The range is a superset of the exact
+    * per-step windows; `coveringSteps` does the exact (t − W, t].
+    */
   private def select(s: SparkSession, dir: String, sel: Selector,
                      boundsSec: Option[(Long, Long)] = None)
                     (implicit src: SampleSource): DataFrame = {
@@ -1207,7 +1204,8 @@ object Promql {
       steps.join(present, Seq("step"), "left_anti").withColumn("value", lit(1.0))
 
     case Agg(op, by, child, k, without, q, vlabel) =>
-      aggOver(eval(s, dir, child), op, by, k, without, q, vlabel)
+      aggOver(nameLabel(eval(s, dir, child), child, by, without),
+        op, by, k, without, q, vlabel)
 
     case MathFn(fn, child, arg, arg2) =>
       mathOver(eval(s, dir, child), fn, arg, arg2)
@@ -1543,6 +1541,14 @@ object Promql {
 
   private def quantilePos(n: Column, q: Double): Column =
     graft.functions.ExactNum.quantilePos(n, q)
+
+  /** `by (event_type)` over a named selector groups by its name (`__name__`). */
+  private def nameLabel(in: DataFrame, child: Expr, by: Seq[String],
+                        without: Boolean): DataFrame = child match {
+    case sel: Selector if sel.metric.nonEmpty && !without &&
+        by.contains("event_type") => in.withColumn("event_type", lit(sel.metric))
+    case _ => in
+  }
 
   /** Cross-series aggregation over an evaluated (step, labels..., value)
     * frame — shared by the tumbling and stepped evaluators.
@@ -2025,7 +2031,8 @@ object Promql {
         steps.join(present, Seq("step"), "left_anti").withColumn("value", lit(1.0))
 
       case Agg(op, by, child, k, without, q, vlabel) =>
-        aggOver(evalAt(s, dir, child, spec), op, by, k, without, q, vlabel)
+        aggOver(nameLabel(evalAt(s, dir, child, spec), child, by, without),
+          op, by, k, without, q, vlabel)
 
       case MathFn(fn, child, arg, arg2) =>
         mathOver(evalAt(s, dir, child, spec), fn, arg, arg2)

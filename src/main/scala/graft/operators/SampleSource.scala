@@ -23,9 +23,9 @@ trait SampleSource {
 }
 
 /** The row store: the raw events table. Bounds reach the parquet scan
-  * on the RAW time column via Tables.eventsRanged (row-group stats
-  * pruning); the `ts_ns` refilter keeps the contract exact regardless
-  * of the layout's time granularity.
+  * on the RAW time column via Tables.eventsRanged (pruning row groups
+  * on the long-ns layout only); the `ts_ns` refilter keeps the
+  * contract exact regardless of the layout's time granularity.
   */
 object EventsSource extends SampleSource {
   override def load(s: SparkSession, dir: String,

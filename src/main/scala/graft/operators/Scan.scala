@@ -68,21 +68,14 @@ object Scan {
       .filter(col("event_type").isin("click", "view", "purchase"))
       .select("event_id", "event_type")
 
-  /** Regex matcher (PromQL `=~`). Regex itself can't push to parquet, but
-    * column pruning still applies; at scale you'd pre-resolve the regex
-    * against the (tiny) distinct label-value set and rewrite to IN — which
-    * is what dictionary-filter pushdown in the reference amounts to
-    * (reference: dataset/predicate.go NewDictionaryFilter).
+  /** Regex matcher (PromQL `=~`). Parquet has no regex filter, so it
+    * is a row filter in the scan's codegen stage: one column-pruned
+    * pass, no join (reference: dataset/predicate.go).
     */
-  def scanRegex(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    // Scale path: resolve regex over the distinct label set (dictionary-
-    // sized, not data-sized), then broadcast-semi-join ≡ IN pushdown.
-    val matching = ev.select("event_type").distinct()
+  def scanRegex(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir)
       .filter(col("event_type").rlike("^(cl|si)"))
-    ev.join(broadcast(matching), Seq("event_type"), "left_semi")
       .select("event_id", "event_type", "user_id")
-  }
 
   /** Negative matcher (`!=`) + modulo sharding predicate. */
   def scanNeg(s: SparkSession, dir: String): DataFrame =
@@ -122,17 +115,6 @@ object Scan {
       .select("user_id", "event_type")
       .distinct()
 
-  /** Matcher application shared by the label APIs and the PromQL
-    * front-end: (label, op, value) triples with op in =, !=, =~ — the
-    * reference's labels.Matcher set (reference:
-    * prometheus/querier.go:93-100). Equality/negation cast the LITERAL
-    * to the column type (the column stays bare, so the predicate pushes
-    * to the parquet scan). Regex resolves against the DISTINCT label
-    * set first and broadcast-semi-joins — the reference's
-    * dictionary-filter pushdown (dataset/predicate.go
-    * NewDictionaryFilter): the regex runs over dictionary-sized data,
-    * never the full scan.
-    */
   /** Does the matcher value denote exactly one value of `dt` whose
     * canonical string form is the value itself? Only then is comparing
     * against the cast literal equivalent to PromQL's string-label
@@ -155,6 +137,14 @@ object Scan {
       case _ => false
     }
 
+  /** Matcher application shared by the label APIs and the PromQL
+    * front-end: (label, op, value) triples with op in =, !=, =~ — the
+    * reference's labels.Matcher set (reference:
+    * prometheus/querier.go:93-100). Equality/negation cast the LITERAL
+    * to the column type (the column stays bare, so the predicate pushes
+    * to the parquet scan). Regex is a row filter over the label's
+    * string form in the same scan, so the source is read once.
+    */
   def applyMatchers(df: DataFrame,
                     matchers: Seq[(String, String, String)]): DataFrame =
     matchers.foldLeft(df) { case (d, (label, op, v)) =>
@@ -172,9 +162,7 @@ object Scan {
         case "=~" =>
           // PromQL regex matchers are FULLY ANCHORED: labels.Matcher
           // compiles `^(?:expr)$`, so `=~"cl"` must not match "click"
-          val matching = d.select(col(label)).distinct()
-            .filter(col(label).cast("string").rlike(s"^(?:$v)$$"))
-          d.join(broadcast(matching), Seq(label), "left_semi")
+          d.filter(col(label).cast("string").rlike(s"^(?:$v)$$"))
         case o => throw new IllegalArgumentException(s"unknown matcher op '$o'")
       }
     }

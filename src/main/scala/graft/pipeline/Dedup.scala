@@ -710,8 +710,6 @@ object Dedup {
         .map(_.asInstanceOf[Long]).getOrElse(0L)
       labels = next.select("id", "label")
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"CC_DEBUG rounds=$rounds")
     (labels.select(col("id").as("doc_id"), col("label").as("cluster_id")), rounds)
   }
 

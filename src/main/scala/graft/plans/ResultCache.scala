@@ -14,11 +14,11 @@ import graft.sources.ChunkStore
   *
   * This is the read-side optimization a dashboard actually exercises
   * at 100 TB: the same panel refreshes every interval with the window
-  * advanced one step — the frontend re-evaluates one step's worth of
-  * raw data (the scan-pushdown machinery bounds the fresh evaluation's
-  * parquet read to the uncovered tail alone) and reads everything else
-  * back from a result store that is orders of magnitude smaller than
-  * the raw table.
+  * advanced one step — the frontend re-evaluates only the uncovered
+  * tail's steps (its parquet read shrinks with them only where the
+  * source prunes on time; the µs events layout is read whole, see
+  * Tables.eventsRanged) and reads everything else back from a result
+  * store orders of magnitude smaller than the raw table.
   *
   * Correctness contract: queryCached(expr, spec) returns ROW-FOR-ROW
   * what Promql.queryAt(expr, spec) returns over the spec's ALIGNED

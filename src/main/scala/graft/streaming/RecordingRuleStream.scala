@@ -74,15 +74,18 @@ object RecordingRuleStream {
   }
 
   /** Serve the maintained store through the evaluator seam. Bounds
-    * prune on ts_ns like every other source.
+    * prune on ts_ns like every other source; no `parts` yet (no window
+    * closed) serves zero samples.
     */
   case class MaintainedSource(storeDir: String)
       extends graft.operators.SampleSource {
     override def load(s: SparkSession, dir: String,
                       boundsNs: Option[(Long, Long)]): DataFrame = {
-      val df = s.read.parquet(s"$storeDir/parts")
-        .select("ts", "ts_ns", "user_id", "event_type", "value", "event_id",
-          "props")
+      val parts = s"$storeDir/parts"
+      val df = if (new java.io.File(parts).isDirectory) s.read.parquet(parts)
+        .select("ts", "ts_ns", "user_id", "event_type", "value", "event_id", "props")
+      else graft.sources.RecordedRules.toSamples(
+        s.range(0).select(col("id").as("step"), lit(0.0).as("value")), "")
       boundsNs.fold(df) { case (lo, hi) =>
         df.filter(col("ts_ns") >= lo && col("ts_ns") <= hi)
       }

@@ -214,4 +214,24 @@ class AlertGroupStreamSpec extends AnyFunSuite {
     assert(al.groupBy("rule", "step", "event_type").count()
       .filter(col("count") > 1).count() === 0, "duplicate alert row")
   }
+
+  test("a maintained store serves zero rows before its first window closes") {
+    val base = new java.io.File("target/tmp/alertgroupstream_open").getAbsolutePath
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    val in = s"$base/in"; val chk = s"$base/chk"; val store = s"$base/store"
+    // three clicks inside one 6h bucket: the watermark (last sample −
+    // 1h) stays short of the bucket's end, so no window closes
+    val t0 = 1704067200L
+    Seq(600L, 3600L, 7200L).zipWithIndex.map { case (dt, i) =>
+      (i.toLong, java.time.LocalDateTime.ofEpochSecond(t0 + dt, 0,
+        java.time.ZoneOffset.UTC), 3L, "click", 1.0 + i, "{}")
+    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1).write.parquet(in)
+    AlertGroupStream.runOnce(spark, in, store, chk, rules)
+    assert(!new java.io.File(s"$store/rec_max/parts").exists())
+    val src = graft.streaming.RecordingRuleStream.MaintainedSource(s"$store/rec_max")
+    assert(graft.operators.Promql.query(spark, in, "sum(rec_max)", src).count() === 0)
+    assert(graft.operators.Promql.queryAt(spark, in, "sum(rec_max)",
+      graft.operators.Promql.EvalSpec(t0, t0 + W6, 60L), src).count() === 0)
+  }
 }

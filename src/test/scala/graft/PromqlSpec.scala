@@ -37,6 +37,26 @@ class PromqlSpec extends AnyFunSuite {
     assert(one.select("user_id").distinct().collect().map(_.getLong(0)).toSeq === Seq(5L))
   }
 
+  test("by (event_type) over a named selector groups by the metric name") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("step", "event_type", "value").collect().map(_.toSeq).toSet
+    val named = Promql.query(spark, sf, "sum by (event_type) (click)")
+    val want = Promql.query(spark, sf, "sum(click)")
+      .withColumn("event_type", lit("click"))
+    assert(named.count() > 0)
+    assert(rows(named) === rows(want))
+    // the stepped evaluator takes the same rule, and `__name__` is the
+    // same label
+    val spec = Promql.EvalSpec(1704067200L, 1704153600L, 3600L, 7200L)
+    val wantAt = Promql.queryAt(spark, sf, "sum(click)", spec)
+      .withColumn("event_type", lit("click"))
+    Seq("sum by (event_type) (click)", "sum by (__name__) (click)").foreach { q =>
+      val got = Promql.queryAt(spark, sf, q, spec)
+      assert(got.count() > 0, q)
+      assert(rows(got) === rows(wantAt), q)
+    }
+  }
+
   test("promql sum equals the direct operator formulation") {
     val viaPromql = Promql.query(spark, sf, "sum(count_over_time(click[1h]))")
     val direct = Tables.events(spark, sf)
@@ -217,8 +237,9 @@ class PromqlSpec extends AnyFunSuite {
   }
 
   test("stepped evaluation pushes the query's time range to the parquet scan") {
-    // a one-day queryAt over a multi-year table must not scan the whole
-    // history: both ts_ns bounds reach the scan as PushedFilters
+    // a one-day queryAt over a multi-year table hands its range to the
+    // scan: both ts_ns bounds reach it as PushedFilters (they skip row
+    // groups only on the long-ns layout, see Tables.eventsRanged)
     val spec = Promql.EvalSpec(1704067200L, 1704153600L, 3600L, 7200L)
     val plan = SparkFixture.planOf(
       Promql.queryAt(spark, sf, "sum(click)", spec))

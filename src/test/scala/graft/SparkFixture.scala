@@ -56,16 +56,29 @@ object SparkFixture {
     * skipping, before Spark's post-scan Filter. The IO-side metric for
     * bloom- and column-index-pruning assertions.
     */
-  def scanOutputRows(df: DataFrame): Long = {
-    df.collect()
-    val executed = df.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case p => p
-    }
-    executed.collectLeaves().collect {
+  def scanOutputRows(df: DataFrame): Long =
+    executedNodes(df).collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
         f.metrics("numOutputRows").value
     }.sum
+
+  /** Executes the frame and returns every operator of its final
+    * physical plan, descending through AQE query stages (a shuffle or
+    * broadcast stage is a leaf of the adaptive plan, its scans below it).
+    */
+  def executedNodes(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    df.collect()
+    AqeWalk.collect(df.queryExecution.executedPlan) { case p => p }
   }
+
+  /** Asserts the frame ran as exactly one parquet scan and no join. */
+  def assertOneScanNoJoin(df: DataFrame): Unit = {
+    val nodes = executedNodes(df)
+    assert(nodes.count(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec]) == 1 &&
+      !nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.joins.BaseJoinExec]),
+      nodes.mkString("\n"))
+  }
+
+  private object AqeWalk
+      extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 }
