@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftInterop, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** RULE GROUPS — N rules, ONE scan (round 17; VERDICT r16 #3).
@@ -125,7 +125,7 @@ object RuleGroup {
         }
       }
     }
-    lastScanPaths.put(System.identityHashCode(s),
+    lastScanPaths.put(GraftInterop.sessionUUID(s),
       passes.flatMap { case (outs, _, paths) =>
         outs.keys.map(_ -> paths) }.toMap)
     passes.flatMap(_._1).toMap
@@ -134,11 +134,12 @@ object RuleGroup {
   /** Spec introspection (optimization r18 — replaces the persist-era
     * cached-plan digging): per session, the file-scan root paths each
     * rule's SHARED PASS actually read, recorded from the EXECUTED plan
-    * of the pass's eager-checkpoint materialization. Replaced on every
-    * evaluate() — bounded like the old one-live-frame cache was.
+    * of the pass's eager-checkpoint materialization, keyed by the
+    * session's UUID, as SessionMemo keys. Replaced on every evaluate() —
+    * bounded like the old one-live-frame cache was.
     */
   private[graft] val lastScanPaths =
-    new java.util.concurrent.ConcurrentHashMap[Int, Map[String, Set[String]]]()
+    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Set[String]]]()
 
   private def scanPathsOf(
       qe: org.apache.spark.sql.execution.QueryExecution): Set[String] = {

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.Materialize.{SessionMemo, par}
 
 /** Deduplication operators for the documents table — the training-data
   * pipeline side of the engine.
@@ -70,15 +71,10 @@ object Dedup {
     * size bounded by distinct contents, the same posture as the
     * checkpoint itself).
     */
-  private val collapsedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def dirKey(s: SparkSession, dir: String): String =
-    System.identityHashCode(s).toHexString + "|" + dir
+  private val collapsedMemo = new SessionMemo[String, DataFrame]
 
   private[pipeline] def collapsed(s: SparkSession, dir: String): DataFrame =
-    collapsedMemo.computeIfAbsent(dirKey(s, dir),
-      _ => contents(s, dir).localCheckpoint(true))
+    collapsedMemo(s, dir)(contents(s, dir).localCheckpoint(true))
   // NOT spread at the store (measured, optimization r18): repartitioning
   // the checkpointed store to defaultParallelism made the heavy gram
   // chains parallel but taxed the store's many SMALL consumers
@@ -160,12 +156,11 @@ object Dedup {
     * content pairs, and both minhash_lsh and the verify family consume
     * it — one band join per session instead of four.
     */
-  private val candMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
+  private val candMemo = new SessionMemo[(String, Int, Int), (DataFrame, DataFrame)]
 
-  private def contentCandidates(key: String, c: DataFrame,
+  private def contentCandidates(s: SparkSession, dir: String, c: DataFrame,
                                 numBands: Int, rowsPerBand: Int): (DataFrame, DataFrame) =
-    candMemo.computeIfAbsent(s"$key|$numBands|$rowsPerBand", _ => {
+    candMemo(s, (dir, numBands, rowsPerBand)) {
       val ex = bands(c, numBands, rowsPerBand)
       val pairs = ex.as("l").join(ex.as("r"),
           col("l.band") === col("r.band") &&
@@ -175,7 +170,7 @@ object Dedup {
         .distinct()
       (pairs.localCheckpoint(true),
         ex.select("cid").distinct().localCheckpoint(true))
-    })
+    }
 
   /** LSH candidate pairs: docs sharing any band. Collapse-first: the
     * band self-join runs over distinct contents; identical docs (which
@@ -185,7 +180,7 @@ object Dedup {
   def minhashLsh(s: SparkSession, dir: String,
                  numBands: Int = 4, rowsPerBand: Int = 2): DataFrame = {
     val c = collapsed(s, dir)
-    val (pairs, banded) = contentCandidates(dirKey(s, dir), c, numBands, rowsPerBand)
+    val (pairs, banded) = contentCandidates(s, dir, c, numBands, rowsPerBand)
     val diagonal = c.filter(col("n_docs") >= 2)
       .join(banded, "cid").select("cid")
     expandPairs(pairs, diagonal, contentDocs(s, dir, c), Seq.empty)
@@ -199,7 +194,7 @@ object Dedup {
     */
   def ngramJaccard(s: SparkSession, dir: String): DataFrame = {
     val c = collapsed(s, dir)
-    val (crossC, diagC) = verifiedContentPairs(dirKey(s, dir), c)
+    val (crossC, diagC) = verifiedContentPairs(s, dir, c)
     expandPairs(crossC, diagC, contentDocs(s, dir, c), Seq("jaccard"))
   }
 
@@ -276,7 +271,7 @@ object Dedup {
     */
   def nearDupContents(s: SparkSession, dir: String): DataFrame = {
     val c = collapsed(s, dir)
-    val (crossC, diagC) = verifiedContentPairs(dirKey(s, dir), c)
+    val (crossC, diagC) = verifiedContentPairs(s, dir, c)
     val nd = c.select(col("cid"), col("n_docs"))
     val cross = crossC
       .join(nd.as("na"), col("c1") === col("na.cid"))
@@ -296,14 +291,14 @@ object Dedup {
     * set, so the shingle intersection join runs once per session, not
     * three times. Output bounded by verified content pairs.
     */
-  private val verifiedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
+  private val verifiedMemo = new SessionMemo[String, (DataFrame, DataFrame)]
 
-  private def verifiedContentPairs(key: String, c: DataFrame): (DataFrame, DataFrame) =
-    verifiedMemo.computeIfAbsent(key, _ => {
+  private def verifiedContentPairs(s: SparkSession, dir: String,
+                                   c: DataFrame): (DataFrame, DataFrame) =
+    verifiedMemo(s, dir) {
       val sh = contentShingles(c)
       val counts = sh.groupBy("cid").agg(count(lit(1)).as("n"))
-      val (candC, banded) = contentCandidates(key, c, 4, 2)
+      val (candC, banded) = contentCandidates(s, dir, c, 4, 2)
       val inter = candC
         .join(sh.as("a"), col("c1") === col("a.cid"))
         .join(sh.as("b"),
@@ -318,7 +313,7 @@ object Dedup {
       val diagC = c.filter(col("n_docs") >= 2)
         .join(banded, "cid").select(col("cid"), lit(1.0).as("jaccard"))
       (crossC.localCheckpoint(true), diagC.localCheckpoint(true))
-    })
+    }
 
   /** (doc_id, simhash): 16-bit SimHash from per-token md5 bits (tokens
     * with multiplicity). All-integer arithmetic → exact across engines.
@@ -639,7 +634,7 @@ object Dedup {
     // diagonal-only contents enter as self-edges so lone duplicate
     // groups still form their cluster.
     val c = collapsed(s, dir)
-    val (crossC, diagC) = verifiedContentPairs(dirKey(s, dir), c)
+    val (crossC, diagC) = verifiedContentPairs(s, dir, c)
     val edges = crossC.select(col("c1").as("id1"), col("c2").as("id2"))
       .unionAll(diagC.select(col("cid").as("id1"), col("cid").as("id2")))
     val labels = clustersFromEdges(edges)._1
@@ -744,11 +739,10 @@ object Dedup {
     * table once and reads it everywhere. Size bounded by the corpus
     * (one row per vector), the tag by distinct vectors.
     */
-  private val vecMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val vecMemo = new SessionMemo[String, DataFrame]
 
   private def taggedVecs(s: SparkSession, dir: String): DataFrame =
-    vecMemo.computeIfAbsent(dirKey(s, dir), _ =>
+    vecMemo(s, dir)(
       tagVecs(Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
         .localCheckpoint(true))
 
@@ -1099,25 +1093,32 @@ object Dedup {
   def admissionRecall(s: SparkSession, dir: String, corpusPct: Int = 80,
                       maxDist: Int = 2, numPlanes: Int = Similarity.NumPlanes,
                       threshold: Double = 0.3): DataFrame = {
-    // ---- simhash leg: truth over DISTINCT hashes (≤ 2^16 each side) --
+    // the simhash leg's eager checkpoint runs CONCURRENTLY with the
+    // embedding legs' construction (whose own eager materializations
+    // are independent jobs) — guide §2.6, optimization r18: the r17
+    // form serialized four checkpoint jobs on the record's critical
+    // path.
+    val (simLeg, embLegs) = par(s,
+      admissionRecallSim(s, dir, corpusPct, maxDist),
+      admissionRecallEmb(s, dir, corpusPct, numPlanes, threshold))
+    simLeg.unionAll(embLegs)
+      .withColumn("recall",
+        col("n_hits").cast("double") / col("n_truth").cast("double"))
+  }
+
+  /** The simhash leg of the admission-recall record: truth over
+    * DISTINCT hashes (≤ 2^16 each side) against the block-join probe.
+    */
+  private def admissionRecallSim(s: SparkSession, dir: String,
+                                 corpusPct: Int, maxDist: Int): DataFrame = {
     // the per-doc simhash frame is MATERIALIZED once (optimization r17,
     // guide §1.2): the record's union branches otherwise re-run the
     // corpus tokenize+hash pass once per lazy consumer (~7 evaluations
     // through ihashes/delta/dhashes/idx) — the frame is 2 narrow
-    // columns per doc, far cheaper to hold than to recompute. The
-    // eager checkpoint runs CONCURRENTLY with the embedding legs'
-    // construction (whose own eager materializations are independent
-    // jobs) — guide §2.6, optimization r18: the r17 form serialized
-    // four checkpoint jobs on the record's critical path.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val simsF = Future(simhashPerDoc(s, dir)
+    // columns per doc, far cheaper to hold than to recompute.
+    val sims = simhashPerDoc(s, dir)
       .withColumn("bucket", splitBucket(col("doc_id")))
-      .localCheckpoint())
-    val embLegsF = Future(
-      admissionRecallEmb(s, dir, corpusPct, numPlanes, threshold))
-    val sims = Await.result(simsF, Duration.Inf)
+      .localCheckpoint()
     val ihashes = sims.filter(col("bucket") < corpusPct)
       .select(col("simhash").as("ihash")).distinct()
     val delta = sims.filter(col("bucket") >= corpusPct)
@@ -1138,14 +1139,11 @@ object Dedup {
     def perDoc(pairs: DataFrame, out: String): DataFrame =
       delta.join(pairs.groupBy("simhash").agg(count(lit(1)).as(out)),
         Seq("simhash"))
-    val simLeg = perDoc(truePairs, "n_truth")
+    perDoc(truePairs, "n_truth")
       .join(perDoc(caughtPairs, "n_hits").select("doc_id", "n_hits"),
         Seq("doc_id"), "left")
       .select(lit("simhash_block").as("method"), col("doc_id").as("id"),
         col("n_truth"), coalesce(col("n_hits"), lit(0L)).as("n_hits"))
-    simLeg.unionAll(Await.result(embLegsF, Duration.Inf))
-      .withColumn("recall",
-        col("n_hits").cast("double") / col("n_truth").cast("double"))
   }
 
   /** The embedding legs of the admission-recall record — probe-width
@@ -1173,21 +1171,17 @@ object Dedup {
     // guide §2.6 — the r17 form ran them back to back, and on the raw
     // record the serialized job latency was the measured regression):
     // critical path = max(index, delta) instead of their sum.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val vidxF = Future(embAdmissionIndex(
-      emb.filter(col("split") < corpusPct).select("vec_id", "embedding"),
-      numPlanes).localCheckpoint())
-    val vdeltaF = Future(emb.filter(col("split") >= corpusPct)
-      .select(col("vec_id"), col("embedding"),
-        graft.functions.VectorOps.dot(col("embedding"), col("embedding"))
-          .as("norm"),
-        Similarity.signSketch(col("embedding"), 0).as("qs0"),
-        Similarity.signSketch(col("embedding"), 1).as("qs1"))
-      .localCheckpoint())
-    val vidx = Await.result(vidxF, Duration.Inf)
-    val vdelta = Await.result(vdeltaF, Duration.Inf)
+    val (vidx, vdelta) = par(s,
+      embAdmissionIndex(
+        emb.filter(col("split") < corpusPct).select("vec_id", "embedding"),
+        numPlanes).localCheckpoint(),
+      emb.filter(col("split") >= corpusPct)
+        .select(col("vec_id"), col("embedding"),
+          graft.functions.VectorOps.dot(col("embedding"), col("embedding"))
+            .as("norm"),
+          Similarity.signSketch(col("embedding"), 0).as("qs0"),
+          Similarity.signSketch(col("embedding"), 1).as("qs1"))
+        .localCheckpoint())
     val cos = graft.functions.VectorOps.dot(col("embedding"), col("iemb")) /
       (sqrt(col("norm")) * sqrt(col("inorm")))
     // BOTH truth sets (loose + semantic threshold) in ONE brute-force

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.Materialize.{SessionMemo, par}
 
 /** Similarity search over the embeddings table (Array[Float], dim=64).
   *
@@ -353,21 +354,16 @@ object Similarity {
     * and served to every leg that probes it (ivf, ivfSq8, residual
     * encode, recall records): the write-once serving posture a real
     * IVF deployment has, and measured at sf0.1 it stops the recall
-    * records from re-deriving the assignment once per leg. Keyed like
-    * truthStore/Dedup.dirKey (session identity included — a
-    * checkpointed frame dies with its SparkContext).
+    * records from re-deriving the assignment once per leg. A session
+    * memo, like truthStore: a checkpointed frame dies with its
+    * SparkContext, so a new session builds its own.
     */
-  private val cellStore =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private[graft] def clearCellStore(): Unit = cellStore.clear()
+  private val cellStore = new SessionMemo[(String, Int), DataFrame]
 
   private def cells(s: SparkSession, dir: String,
                     numCells: Int = NumCells): DataFrame =
-    cellStore.computeIfAbsent(
-      System.identityHashCode(s).toHexString + "|" + dir + "|" + numCells,
-      _ => assignTo(withNorm(s, dir), formulaCentroids(numCells))
-        .localCheckpoint())
+    cellStore(s, (dir, numCells))(
+      assignTo(withNorm(s, dir), formulaCentroids(numCells)).localCheckpoint())
 
   /** Formula-centroid cell assignment over ANY (vec_id, embedding)
     * frame — the stateless kernel the STREAMING index maintainer
@@ -1132,10 +1128,7 @@ object Similarity {
   /** Code count of the 8-bit scalar quantizer: codes 0..255. */
   val Sq8Levels = 255
 
-  private val sq8Memo = new java.util.concurrent.ConcurrentHashMap[
-    String, (IndexedSeq[Double], IndexedSeq[Double])]()
-
-  private[graft] def clearSq8Memo(): Unit = sq8Memo.clear()
+  private val sq8Memo = new SessionMemo[String, (IndexedSeq[Double], IndexedSeq[Double])]
 
   /** SQ8 training pass: per-dimension [min, max] of the corpus — ONE
     * embarrassingly parallel scan into a Dim-keyed partial agg (64
@@ -1147,22 +1140,21 @@ object Similarity {
     * (128 doubles), trained once and broadcast.
     */
   private def sq8Stats(s: SparkSession, dir: String): (IndexedSeq[Double], IndexedSeq[Double]) =
-    sq8Memo.computeIfAbsent(
-      System.identityHashCode(s).toHexString + "|" + dir, _ => {
-        val rows = Tables.embeddings(s, dir)
-          .select(posexplode(col("embedding")))
-          .toDF("j", "x")
-          .groupBy("j")
-          .agg(min(col("x").cast("double")).as("mn"),
-            max(col("x").cast("double")).as("mx"))
-          .collect()
-        val mn = Array.fill(Dim)(0.0)
-        val mx = Array.fill(Dim)(0.0)
-        rows.foreach { r =>
-          val j = r.getInt(0); mn(j) = r.getDouble(1); mx(j) = r.getDouble(2)
-        }
-        (mn.toIndexedSeq, mx.toIndexedSeq)
-      })
+    sq8Memo(s, dir) {
+      val rows = Tables.embeddings(s, dir)
+        .select(posexplode(col("embedding")))
+        .toDF("j", "x")
+        .groupBy("j")
+        .agg(min(col("x").cast("double")).as("mn"),
+          max(col("x").cast("double")).as("mx"))
+        .collect()
+      val mn = Array.fill(Dim)(0.0)
+      val mx = Array.fill(Dim)(0.0)
+      rows.foreach { r =>
+        val j = r.getInt(0); mn(j) = r.getDouble(1); mx(j) = r.getDouble(2)
+      }
+      (mn.toIndexedSeq, mx.toIndexedSeq)
+    }
 
   /** Dequantized SQ8 vector as a column: per dim, code =
     * clamp(⌊(x−mn)/(mx−mn)·255⌋), recon = mn + (code+0.5)·(mx−mn)/255
@@ -1294,19 +1286,14 @@ object Similarity {
     * standalone ann_bruteforce entry does NOT use it: that entry
     * measures the exact scan itself.
     */
-  private val truthStore =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), DataFrame]()
+  private val truthStore = new SessionMemo[(String, Int), DataFrame]
 
   private def recallOf(s: SparkSession, dir: String, k: Int,
                        legs: Seq[(String, Boolean, () => DataFrame)]): DataFrame = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    // key includes the session identity (Dedup.dirKey discipline): a
-    // checkpointed frame is bound to its SparkContext, so a restarted
-    // session must rebuild, not be served a dead frame
-    val truth = truthStore.computeIfAbsent(
-      (System.identityHashCode(s).toHexString + "|" + dir, k), _ =>
+    // a session memo: a checkpointed frame is bound to its
+    // SparkContext, so a restarted session must rebuild, not be served
+    // a dead frame
+    val truth = truthStore(s, (dir, k))(
       bruteForce(s, dir).filter(col("rnk") <= k)
         .select("qid", "vec_id").localCheckpoint())
     val tr = truth.groupBy("qid").agg(count(lit(1)).as("n_truth"))
@@ -1315,7 +1302,8 @@ object Similarity {
     // Dataset call re-runs the analyzer on the growing plan — build
     // them on concurrent driver threads (optimization r18, guide §2.6:
     // the sequential construction alone measured ~3 s of the record)
-    val built = legs.map { case (n, cos, f) => (n, cos, Future(f())) }
+    val built = legs.zip(par(s, legs.map(_._3)))
+      .map { case ((n, cos, _), df) => (n, cos, df) }
     // The legs' top-k ranking fuses into TWO shared windows over
     // (method, qid) — one per ordering kind (cosine desc, approx-dist
     // asc) — instead of one window exchange per leg, and ONE tagged
@@ -1327,10 +1315,9 @@ object Similarity {
     def ranked(cos: Boolean): Option[DataFrame] = {
       val subset = built.filter(_._2 == cos)
       if (subset.isEmpty) return None
-      val tagged = subset.map { case (n, _, fut) =>
-        Await.result(fut, Duration.Inf)
-          .select(lit(n).as("method"), col("qid"), col("vec_id"),
-            (if (cos) col("cosine") else col("adist")).as("score")) }
+      val tagged = subset.map { case (n, _, df) =>
+        df.select(lit(n).as("method"), col("qid"), col("vec_id"),
+          (if (cos) col("cosine") else col("adist")).as("score")) }
         .reduce(_ unionAll _)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("method", "qid")

@@ -3,8 +3,9 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into the `private[sql]` Column↔Expression converters so graft's
-  * native Catalyst expressions can surface as ordinary Columns. Lives in
-  * the org.apache.spark.sql package for access; contains no logic.
+  * native Catalyst expressions can surface as ordinary Columns, and into
+  * the `private[spark]` thread-local job properties. Lives in the
+  * org.apache.spark.sql package for access; contains no logic.
   */
 object GraftInterop {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -27,4 +28,11 @@ object GraftInterop {
   def hasStrategy(spark: SparkSession, strategy: AnyRef): Boolean =
     spark.asInstanceOf[classic.SparkSession]
       .sessionState.planner.extraPlanningStrategies.exists(_ eq strategy)
+  def sessionUUID(spark: SparkSession): String =
+    spark.asInstanceOf[classic.SparkSession].sessionUUID
+  /** A copy of the calling thread's local properties (job group, ...). */
+  def localProperties(spark: SparkSession): java.util.Properties =
+    org.apache.spark.util.Utils.cloneProperties(spark.sparkContext.getLocalProperties)
+  def setLocalProperties(spark: SparkSession, props: java.util.Properties): Unit =
+    spark.sparkContext.setLocalProperties(props)
 }

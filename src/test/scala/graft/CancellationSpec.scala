@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.pipeline.Dedup
 import SparkFixture.{sf, spark}
 
 /** The reference's TestConcurrentCancellation contract
@@ -64,5 +65,45 @@ class CancellationSpec extends AnyFunSuite {
     assert(secs < 90.0, s"cancellation must be prompt, took $secs s")
     // the session is not poisoned: a normal query still runs
     assert(Tables.events(spark, sf).limit(5).count() === 5L)
+  }
+
+  test("cancelling the caller's group stops every parallel leg of Dedup.admissionRecall") {
+    val group = "graft-cancel-legs-test"
+    val sc = spark.sparkContext
+    // one call outside any group first: parallel-build threads then
+    // exist holding whatever properties they started with
+    val expected = Dedup.admissionRecall(spark, sf).count()
+    JobRecorder.during(sc) { rec =>
+      @volatile var err: Throwable = null
+      val t = new Thread(() => {
+        try {
+          sc.setJobGroup(group, "admission recall", interruptOnCancel = true)
+          Dedup.admissionRecall(spark, sf).collect()
+        } catch { case e: Throwable => err = e }
+        finally sc.clearJobGroup()
+      })
+      t.start()
+      // cancel as soon as the call's first job starts, whatever its
+      // group: the legs are then still building
+      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+      while (!rec.seenAny && System.nanoTime() < deadline && t.isAlive)
+        Thread.sleep(5)
+      assert(rec.seenAny, "the call never started a job")
+      sc.cancelJobGroupAndFutureJobs(group)
+      val cancelledAt = System.currentTimeMillis()
+      t.join(120000)
+      assert(!t.isAlive, "the cancelled call must return")
+      assert(err != null, "the caller must observe the cancellation")
+      val jobs = rec.jobs()
+      val outside = jobs.filter(_.group != group)
+      assert(outside.isEmpty,
+        s"${outside.size} of ${jobs.size} jobs ran outside the caller's group")
+      val ran = jobs.filter(j => j.startMs > cancelledAt && rec.succeededJob(j.id))
+      assert(ran.isEmpty, s"jobs ran to completion after the cancel: $ran")
+      val active = sc.statusTracker.getActiveJobIds().toSet
+      assert(!jobs.exists(j => active(j.id)), "a job of the call is still running")
+    }
+    // the session is not poisoned: the same call succeeds
+    assert(Dedup.admissionRecall(spark, sf).count() === expected)
   }
 }

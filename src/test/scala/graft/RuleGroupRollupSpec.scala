@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.GraftInterop
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -65,11 +66,11 @@ class RuleGroupRollupSpec extends AnyFunSuite {
     */
   private def scanLocations(s: org.apache.spark.sql.SparkSession,
                             rule: String): Set[String] =
-    RuleGroup.lastScanPaths.get(System.identityHashCode(s))(rule)
+    RuleGroup.lastScanPaths.get(GraftInterop.sessionUUID(s))(rule)
 
   private def allScanLocations(
       s: org.apache.spark.sql.SparkSession): Set[String] =
-    RuleGroup.lastScanPaths.get(System.identityHashCode(s))
+    RuleGroup.lastScanPaths.get(GraftInterop.sessionUUID(s))
       .values.reduce(_ ++ _)
 
   test("every servable verb: rollup-served group bit-equal to the raw group") {
